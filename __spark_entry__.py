@@ -13,8 +13,10 @@ contract layer.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
+import zipfile
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -26,7 +28,49 @@ from pastash_spark.plans import flagship  # noqa: E402
 from pastash_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
+_ZIP = os.path.join(_REPO, "dist", "pastash_spark.zip")
 _shipped: set[str] = set()
+
+
+def _package_sources() -> list[str]:
+    """Repo-relative paths of the package's .py files, sorted."""
+    out = []
+    for root, dirs, files in os.walk(os.path.join(_REPO, "pastash_spark")):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        out.extend(os.path.relpath(os.path.join(root, f), _REPO)
+                   for f in files if f.endswith(".py"))
+    return sorted(out)
+
+
+def _source_hash() -> str:
+    """sha256 over the package's .py paths and contents."""
+    h = hashlib.sha256()
+    for rel in _package_sources():
+        h.update(rel.encode() + b"\0")
+        with open(os.path.join(_REPO, rel), "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
+def _package_zip(zip_path: str = _ZIP) -> str:
+    """The package zip for executors, rebuilt unless its comment records
+    the current `_source_hash()` — a zip left from older sources (or built
+    by scripts/package.sh, which writes no hash) is replaced, so executors
+    never import stale code.  The rebuild writes a temp file and renames
+    it into place."""
+    digest = _source_hash()
+    if os.path.exists(zip_path):
+        with zipfile.ZipFile(zip_path) as zf:
+            if zf.comment == digest.encode():
+                return zip_path
+    os.makedirs(os.path.dirname(zip_path), exist_ok=True)
+    tmp = f"{zip_path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        for rel in _package_sources():
+            zf.write(os.path.join(_REPO, rel), rel)
+        zf.comment = digest.encode()
+    os.replace(tmp, zip_path)
+    return zip_path
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
@@ -38,20 +82,7 @@ def _ensure_shipped(spark: SparkSession) -> None:
     app = spark.sparkContext.applicationId
     if app in _shipped:
         return
-    zip_path = os.path.join(_REPO, "dist", "pastash_spark.zip")
-    if not os.path.exists(zip_path):
-        import zipfile
-        os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            pkg = os.path.join(_REPO, "pastash_spark")
-            for root, _dirs, files in os.walk(pkg):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        zf.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _shipped.add(app)
 
 

@@ -88,6 +88,61 @@ def forward_fill_correlation(df: DataFrame, *, key: str | Sequence[str],
     return df.withColumn(target, F.last(F.col(value), ignorenulls=True).over(w))
 
 
+def asof_latest(probes: DataFrame, pubs: DataFrame, *, keys: Sequence[str],
+                probe_order: str, pub_order: str, cols: Sequence[str],
+                first_only: bool = False) -> DataFrame:
+    """Keyed-cache read as an as-of lookup: every ``probes`` row gets
+    ``cols`` from the latest ``pubs`` row on the same ``keys`` strictly
+    earlier in order, or nulls when there is none.  This is the batch
+    form of a driver-side cache that some lines publish to and later
+    lines read (rtpproxy's ipcache and port alias, audiocodes' sidcache).
+
+    With ``first_only`` a publication is consumed by the first probe
+    after it, like a cache entry the reader nulls: a later probe before
+    the next publication gets nulls.
+
+    One merged stream and one Window, no join.  Probes and pubs are
+    unioned; the pub values ride a struct that is null on probe rows.
+    Per key the stream sorts by order, then by that struct (nulls first),
+    which is a total order: probes come before pubs of equal order, so a
+    match is strictly earlier, and equal-order pubs resolve by value.
+    The latest pub is ``last(ignorenulls)`` of the struct; under
+    ``first_only`` it is ``lag``, since a probe's immediate predecessor is
+    a pub only for the first probe after it.
+
+    Returns the probes' columns plus ``cols``.  Callers that want inner
+    semantics filter on a column the pubs never leave null.
+    """
+    stream = (probes.select("*", F.col(probe_order).alias("_asof_o"))
+              .unionByName(pubs.select(
+                  *keys, F.col(pub_order).alias("_asof_o"),
+                  F.struct(*cols).alias("_asof_v")),
+                  allowMissingColumns=True))
+    w = Window.partitionBy(*keys).orderBy("_asof_o", "_asof_v")
+    hit = (F.lag("_asof_v").over(w) if first_only
+           else F.last("_asof_v", ignorenulls=True).over(w))
+    return (stream.select("*", hit.alias("_asof_hit"))
+            .filter(F.col("_asof_v").isNull())
+            .select("*", *[F.col("_asof_hit")[c].alias(c) for c in cols])
+            .drop("_asof_o", "_asof_v", "_asof_hit"))
+
+
+def latest_by(df: DataFrame, keys: Sequence[str], order: str,
+              cols: Sequence[str]) -> DataFrame:
+    """Latest row per key: one row of ``keys`` + ``cols`` per key, taken
+    from the row with the greatest ``order``; rows tied on ``order``
+    resolve by their ``cols`` values, so the pick is deterministic.
+
+    ``max`` of a (order, *cols) recency struct — struct comparison is
+    lexicographic — in one keyed aggregate with a map-side partial
+    combine, so about one row per key and partition crosses the exchange
+    instead of every row.  The same recipe as app_janus_correlate's dims.
+    """
+    latest = F.max(F.struct(F.col(order).alias("_o"), *cols))
+    return (df.groupBy(*keys).agg(latest.alias("_l"))
+            .select(*keys, *[F.col("_l")[c].alias(c) for c in cols]))
+
+
 def bleg_correlation(df: DataFrame, *, key: str = "unique_id",
                      other_key: str = "other_leg_unique_id",
                      corr: str = "correlation_id") -> DataFrame:
@@ -262,21 +317,16 @@ def app_janus_correlate(df: DataFrame, *, ts: str = "ts",
     Adds/fills: session_id (type-128 backfill), opaque_id (propagated per
     session), media_ip/media_port (type 32 only).
     """
-    # PERF (r06): latest-write-wins as max_by over the (ts, order) struct
-    # instead of a row_number sort-window — a hash aggregate with
-    # map-side partial combine (no per-key sort, ~|keys| rows cross the
-    # exchange instead of every event).  (ts, order) is the same
-    # deterministic recency key the window ordered by; struct comparison
-    # is lexicographic, so the selected row is identical.
-    # PERF (r06b): the four pairing dims collapse into TWO keyed
-    # aggregations (session-keyed and transport-keyed) with CONDITIONAL
-    # max_by per value — max_by ignores rows whose ordering expression is
-    # null, so when(type==.., recency) reproduces each original filtered
-    # dim exactly (a key with no qualifying rows yields null, which the
-    # downstream coalesces treat identically to the old left-join miss).
-    # 2 source scans + 2 exchanges instead of 4+4; the opaque and media
-    # lookups share ONE join of the merged session dim (the media values
-    # were already consumed only under when(type==32)).
+    # latest-write-wins is the `latest_by` recipe — max over the (ts,
+    # order) recency struct in a keyed aggregate — with the four pairing
+    # dims folded into TWO keyed aggregations (session-keyed and
+    # transport-keyed) by CONDITIONAL max_by per value: max_by ignores
+    # rows whose ordering expression is null, so when(type==.., recency)
+    # reproduces each filtered dim exactly (a key with no qualifying rows
+    # yields null, which the downstream coalesces treat like a left-join
+    # miss).  The opaque and media lookups share ONE join of the merged
+    # session dim (the media values are consumed only under
+    # when(type==32)).
     live = df.filter(F.col("type") != 64)
     recency = F.struct(F.col(ts).alias("_t"), F.col(order).alias("_o"))
     typ = F.col("type")
@@ -422,25 +472,21 @@ def app_janus_sip_correlate(df: DataFrame, *, order: str = "event_id",
     micros).  Output: one HEP row per SIP event."""
     t = F.col("type").cast("int")
 
-    ws_dim = (df.filter((t == 128) & (F.col("ws_event") == "connected")
-                        & F.col("ws_id").isNotNull())
-              .select(F.col("ws_id").alias("_w_id"),
-                      F.col("ws_ip").alias("_w_ip"),
-                      F.col(order).alias("_w_o")))
-    w_ws = Window.partitionBy("_w_id").orderBy(F.col("_w_o").desc())
-    ws_dim = (ws_dim.withColumn("_rn", F.row_number().over(w_ws))
-              .filter(F.col("_rn") == 1).select("_w_id", "_w_ip"))
+    ws_dim = latest_by(
+        df.filter((t == 128) & (F.col("ws_event") == "connected")
+                  & F.col("ws_id").isNotNull()),
+        ["ws_id"], order, ["ws_ip"])
+    ws_dim = ws_dim.select(F.col("ws_id").alias("_w_id"),
+                           F.col("ws_ip").alias("_w_ip"))
 
-    sess_pub = (df.filter((t == 1) & F.col("ws_id").isNotNull()
-                          & F.col("session_id").isNotNull())
+    sess_dim = latest_by(
+        df.filter((t == 1) & F.col("ws_id").isNotNull()
+                  & F.col("session_id").isNotNull()),
+        ["session_id"], order, ["ws_id"])
+    sess_dim = (sess_dim.join(ws_dim, F.col("ws_id") == F.col("_w_id"),
+                              "left")
                 .select(F.col("session_id").alias("_s_id"),
-                        F.col("ws_id").alias("_s_ws"),
-                        F.col(order).alias("_s_o")))
-    w_sess = Window.partitionBy("_s_id").orderBy(F.col("_s_o").desc())
-    sess_dim = (sess_pub.withColumn("_rn", F.row_number().over(w_sess))
-                .filter(F.col("_rn") == 1)
-                .join(ws_dim, F.col("_s_ws") == F.col("_w_id"), "left")
-                .select("_s_id", F.col("_w_ip").alias("_sess_ip")))
+                        F.col("_w_ip").alias("_sess_ip")))
 
     sip_raw = F.col("sip").cast("string")
     via_re = r"(?im)^(?:Via|v)\s*:\s*SIP/2\.0/\w+\s+([^;:\s]+)(?::([0-9]+))?"
@@ -537,9 +583,7 @@ def app_genesys_correlate(df: DataFrame, *, field: str = "message",
                     ord_c.alias("_po"))
             .filter(F.col("_cid").isNotNull()
                     & F.col("_uuid").isNotNull()))
-    w_pub = Window.partitionBy("_cid").orderBy(F.col("_po").desc())
-    pubs = (pubs.withColumn("_rn", F.row_number().over(w_pub))
-            .filter(F.col("_rn") == 1).select("_cid", "_uuid"))
+    pubs = latest_by(pubs, ["_cid"], "_po", ["_uuid"])
 
     rcv_re = r"Received \[(.*),(.*)\] (.*) bytes from (.*):(.*) "
     snd_re = r"Sending  \[(.*),(.*)\] (.*) bytes to (.*):(.*) "
@@ -1256,8 +1300,8 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
     filter_app_rtpproxy.js:55-134): the reference keeps a driver-side
     ``ipcache`` keyed by command token (and a port->token alias map) across
     lines; replies complete the cached session and emit a call-correlation
-    object.  Relational re-expression — the caches become AS-OF JOINS on
-    (token | port) ordered by ``order``:
+    object.  Relational re-expression — each cache read is an
+    `asof_latest` lookup on (token | port) ordered by ``order``:
 
       * ``received command "<token> [US|U|L]c<codecs> <corr>`` rows CREATE a
         session: first codec -> RTPmap name/rate/pt, direction L->1 else 0
@@ -1265,12 +1309,12 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
       * ``new session on IPv4 port <port> created ... tag <token>`` rows
         publish the port->token alias (:80-84)
       * ``rtpc_doreply: sending reply "<port> <ip>\\n"`` resolves its token
-        THROUGH the alias (:86-100); plain ``sending reply "<token> <port>
-        <ip>#012`` is keyed directly (:102-115).  Either emits one
-        method='create' row with the reply's port/ip joined to the LATEST
-        prior create for that token — and consumes it (the reference nulls
-        the cache entry), so each create pairs with at most its FIRST
-        following reply: groupBy (token, create_order) min(reply_order).
+        THROUGH the latest earlier alias, which it consumes (:86-100);
+        plain ``sending reply "<token> <port> <ip>#012`` is keyed directly
+        (:102-115).  Either emits one method='create' row with the reply's
+        port/ip and the LATEST earlier create for that token — and
+        consumes it (the reference nulls the cache entry), so each create
+        pairs with at most its FIRST following reply.
       * ``session on ports <p1>/<p2> is cleaned up`` emits method='delete'
         clones of the session(s) last seen on those ports (:117-133 —
         NOTE: in the reference this branch is dead-by-construction, since
@@ -1279,8 +1323,9 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
 
     Output: one row per emitted correlation object — (method,
     correlation_id, token, codec_name, codec_pt, codec_rate, direction,
-    port, ip, `order`).  Everything is equi-joins + windows; the token/port
-    keys are high-cardinality, so the shuffles stay balanced at scale.
+    port, ip, `order`).  Three as-of lookups, each one Window over a
+    merged stream; no joins.  The token/port keys are high-cardinality,
+    so the shuffles stay balanced at scale.
     """
     # PERF (r06): ONE Arrow pass evaluates every family's line regex
     # (the old branches re-ran 2-4 JVM regexp_extract per matching line —
@@ -1322,111 +1367,51 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
         F.when(F.col("_mode") == "L", 1).otherwise(0).alias("direction"))
 
     aliases = _fam("a_port", "_a_ord",
-                   ("a_port", "_a_port"), ("a_token", "_a_token"))
+                   ("a_port", "port"), ("a_token", "_a_token"))
 
     # reply branch precedence (doreply vs plain) mirrors the reference's
     # if/else chain — encoded in the matcher's masks
-    do_replies = _fam("d_port", "_r_ord",
-                      ("d_port", "_r_port"), ("d_ip", "ip"))
-    # port -> token through the LATEST prior alias publication
-    do_replies = (do_replies.join(
-        aliases, (F.col("_a_port") == F.col("_r_port"))
-        & (F.col("_a_ord") < F.col("_r_ord")), "inner"))
-    w_last_alias = Window.partitionBy("_r_ord").orderBy(F.col("_a_ord").desc())
-    do_replies = (do_replies
-                  .withColumn("_rn", F.row_number().over(w_last_alias))
-                  .filter(F.col("_rn") == 1))
-    # the reference NULLs ipcache['port_'+port] after emitting (:100) — an
-    # alias publication is consumed by its FIRST doreply; later doreplies
-    # on the same port need a fresh 'new session on IPv4 port' line
-    w_alias_consume = Window.partitionBy("_r_port", "_a_ord") \
-        .orderBy(F.col("_r_ord"))
-    do_replies = (do_replies
-                  .withColumn("_rn2", F.row_number().over(w_alias_consume))
-                  .filter(F.col("_rn2") == 1)
-                  .select(F.col("_a_token").alias("token"),
-                          F.col("_r_port").alias("port"), "ip", "_r_ord"))
-
+    do_replies = _fam("d_port", "_r_ord", ("d_port", "port"), ("d_ip", "ip"))
+    # port -> token through the latest earlier alias publication, which
+    # the reference NULLs after emitting (:100): a later doreply on the
+    # same port needs a fresh 'new session on IPv4 port' line
+    do_replies = (asof_latest(do_replies, aliases, keys=["port"],
+                              probe_order="_r_ord", pub_order="_a_ord",
+                              cols=["_a_token"], first_only=True)
+                  .filter(F.col("_a_token").isNotNull())
+                  .select(F.col("_a_token").alias("token"), "port", "ip",
+                          "_r_ord"))
     tok_replies = _fam("r_token", "_r_ord",
                        ("r_token", "token"), ("r_port", "port"),
                        ("r_ip", "ip"))
     replies = do_replies.unionByName(tok_replies)
 
-    # PERF (r06b): the as-of pairing is a MERGED per-token stream instead
-    # of a reply x create range join + two windows.  The old join emitted
-    # every (reply, prior create) combination per token before the as-of
-    # window cut it back — quadratic on a hot token — and needed two join
-    # exchanges; the merged stream is one hash(token) exchange, a
-    # forward-fill window (latest create at/before each reply = the old
-    # w_asof winner) and a first-reply-per-create row_number (the old
-    # w_first consume rule), which reuses the same partitioning (subset
-    # key) so no further shuffle.  A reply whose forward-fill is null has
-    # no prior create — exactly the rows the old inner join dropped.
-    ns = F.lit(None).cast("string")
-    merged_stream = (creates
-                     .select("token", F.col("_c_ord").alias("_ord"),
-                             F.lit(True).alias("_isc"), "correlation_id",
-                             "codec_name", "codec_pt", "codec_rate",
-                             "direction", ns.alias("port"), ns.alias("ip"))
-                     .unionByName(replies.select(
-                         "token", F.col("_r_ord").alias("_ord"),
-                         F.lit(False).alias("_isc"),
-                         ns.alias("correlation_id"), ns.alias("codec_name"),
-                         F.lit(None).cast("int").alias("codec_pt"),
-                         F.lit(None).cast("int").alias("codec_rate"),
-                         F.lit(None).cast("int").alias("direction"),
-                         "port", "ip")))
-    # _ord doubles as _c_ord on create rows, so the fill struct needs no
-    # extra column and keeps the order column's dtype
-    merged_stream = merged_stream.withColumn(
-        "_cr", F.when(F.col("_isc"), F.struct(
-            "correlation_id", "codec_name", "codec_pt", "codec_rate",
-            "direction", F.col("_ord").alias("_c_ord"))))
-    # "first reply after the latest create" == "reply whose immediate
-    # predecessor in the (token, order) stream is a create": any earlier
-    # reply after that create would itself sit between the create and this
-    # row.  So the consume rule is a lag() over the SAME window spec as
-    # the forward-fill — one sort, one Window pass (a predecessor that is
-    # a create also guarantees the fill is non-null).
-    w_fill = Window.partitionBy("token").orderBy("_ord")
-    paired = (merged_stream
-              .withColumn("_f", F.last("_cr", ignorenulls=True).over(w_fill))
-              .withColumn("_pc", F.lag("_isc").over(w_fill))
-              .filter(~F.col("_isc") & F.col("_pc")))
-    created = paired.select(
-        F.lit("create").alias("method"),
-        F.col("_f.correlation_id").alias("correlation_id"), "token",
-        F.col("_f.codec_name").alias("codec_name"),
-        F.col("_f.codec_pt").alias("codec_pt"),
-        F.col("_f.codec_rate").alias("codec_rate"),
-        F.col("_f.direction").alias("direction"), "port", "ip",
-        F.col("_ord").alias(order))
-    # `created` is both an output branch AND the delete branch's join
-    # source.  PERF (r06b): NOT checkpointed anymore — since the merged-
-    # stream rewrite both consumers share one exchange subtree that AQE's
-    # stage reuse dedups (the old as-of-join shape really did run twice:
-    # 15 Window operators from duplicated subtrees), a cleans-empty input
-    # prunes the delete branch entirely via empty-relation propagation,
-    # and each localCheckpoint cost ~0.5-1.9 s of DRIVER build time per
-    # fresh plan (toRdd planning + UDF command broadcast), which the
-    # bench's fresh-plan protocol pays every run.
+    session = ["correlation_id", "codec_name", "codec_pt", "codec_rate",
+               "direction"]
+    out_cols = ["correlation_id", "token", "codec_name", "codec_pt",
+                "codec_rate", "direction", "port", "ip"]
+    created = (asof_latest(replies, creates, keys=["token"],
+                           probe_order="_r_ord", pub_order="_c_ord",
+                           cols=[*session, "_c_ord"], first_only=True)
+               .filter(F.col("_c_ord").isNotNull())
+               .select(F.lit("create").alias("method"), *out_cols,
+                       F.col("_r_ord").alias(order)))
+    # `created` is both an output branch and the cleanup lookup's pubs;
+    # not checkpointed: AQE's stage reuse dedups the shared subtree, and a
+    # localCheckpoint costs driver build time on every fresh plan.
 
-    # cleanup: method='delete' clone of the session last seen on each port
+    # cleanup: method='delete' clone of the session last seen on each
+    # port; a line naming one port twice emits one delete
+    ports = F.array_distinct(F.array(m["x_p1"], m["x_p2"]))
     cleans = (df.filter(m["x_p1"].isNotNull())
-              .select(F.explode(F.array(m["x_p1"], m["x_p2"]))
-                      .alias("_d_port"),
+              .select(F.explode(ports).alias("port"),
                       F.col(order).alias("_d_ord"))
-              .filter(F.col("_d_port") != ""))
-    dels = cleans.join(created.withColumnRenamed(order, "_e_ord"),
-                       (F.col("port") == F.col("_d_port"))
-                       & (F.col("_e_ord") < F.col("_d_ord")), "inner")
-    w_lastsess = Window.partitionBy("_d_ord", "_d_port") \
-        .orderBy(F.col("_e_ord").desc())
-    dels = (dels.withColumn("_rn", F.row_number().over(w_lastsess))
-            .filter(F.col("_rn") == 1)
-            .select(F.lit("delete").alias("method"), "correlation_id",
-                    "token", "codec_name", "codec_pt", "codec_rate",
-                    "direction", "port", "ip",
+              .filter(F.col("port") != ""))
+    dels = (asof_latest(cleans, created, keys=["port"],
+                        probe_order="_d_ord", pub_order=order,
+                        cols=["token", *session, "ip"])
+            .filter(F.col("token").isNotNull())
+            .select(F.lit("delete").alias("method"), *out_cols,
                     F.col("_d_ord").alias(order)))
     return created.unionByName(dels)
 
@@ -1881,20 +1866,17 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
             F.lit(17).alias("protocol")))
         outs.append(call_end)
         # other SID-carrying lines: correlation through the sidcache twin —
-        # as-of last SIP Call-ID published for that sid
+        # the latest SIP Call-ID published earlier for that sid, else the
+        # sid itself
         others = base.filter(
             (F.col("sid") != "") & ~is_sipline & ~F.col("_consumed")
             & ~l.contains("CALL_END ") & ~l.contains("MEDIA_END "))
         sip_cids = core.filter(F.col("proto_type") == 1).select(
             "sid", F.col(order).alias("_o"),
             F.col("correlation_id").alias("_cid"))
-        # as-of join sip_cids to each log line (latest _o < order)
-        logline = others.select(F.col(order), "sid", "_line")
-        j = logline.join(sip_cids, "sid", "left") \
-            .filter(F.col("_o").isNull() | (F.col("_o") < F.col(order)))
-        w_last = Window.partitionBy("sid", order).orderBy(F.col("_o").desc())
-        j = (j.withColumn("_rn", F.row_number().over(w_last))
-             .filter(F.col("_rn") == 1))
+        j = asof_latest(others.select(F.col(order), "sid", "_line"),
+                        sip_cids, keys=["sid"], probe_order=order,
+                        pub_order="_o", cols=["_cid"])
         outs.append(j.select(
             F.col(order), "sid", F.lit(100).alias("proto_type"),
             F.col("_line").alias("payload"),

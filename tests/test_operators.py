@@ -528,6 +528,50 @@ def test_asof_lookup_set_get(spark):
 
 # --- correlate --------------------------------------------------------------
 
+def _asof(spark, probes, pubs, **kw):
+    pr = spark.createDataFrame(probes, "k string, t long, tag string")
+    pb = spark.createDataFrame(pubs, "k string, po long, v string")
+    out = C.asof_latest(pr, pb, keys=["k"], probe_order="t",
+                        pub_order="po", cols=["v"], **kw)
+    assert out.columns == ["k", "t", "tag", "v"]
+    return {r.tag: r.v for r in out.collect()}
+
+
+def test_asof_latest_reads_latest_strictly_earlier_pub(spark):
+    got = _asof(spark,
+                [("a", 1, "before"), ("a", 2, "tie"), ("a", 3, "after"),
+                 ("a", 9, "later"), ("b", 9, "b9"), ("c", 9, "c9"),
+                 ("d", 2, "d2")],
+                [("a", 2, "v2"), ("a", 5, "v5"), ("b", 7, "w7"),
+                 ("d", 1, "x"), ("d", 1, "y")])
+    # a probe before any pub reads null, an equal-order pub is not
+    # earlier, keys never read each other's pubs, and equal-order pubs
+    # resolve by value
+    assert got == {"before": None, "tie": None, "after": "v2", "later": "v5",
+                   "b9": "w7", "c9": None, "d2": "y"}
+
+
+def test_asof_latest_first_only_consumes_pub(spark):
+    probes = [("a", 2, "first"), ("a", 3, "second"), ("a", 6, "fresh"),
+              ("b", 4, "other_key")]
+    pubs = [("a", 1, "v1"), ("a", 5, "v5"), ("b", 1, "w1")]
+    assert _asof(spark, probes, pubs, first_only=True) == {
+        "first": "v1", "second": None, "fresh": "v5", "other_key": "w1"}
+    # without first_only every probe reads the latest earlier pub
+    assert _asof(spark, probes, pubs)["second"] == "v1"
+
+
+def test_latest_by_picks_greatest_order_ties_by_value(spark):
+    rows = [("a", 1, "old"), ("a", 3, "m"), ("a", 3, "z"), ("a", 3, "b"),
+            ("b", 2, "only")]
+    for parts in (1, 3):
+        df = spark.createDataFrame(rows, "k string, o long, v string") \
+            .repartition(parts)
+        out = C.latest_by(df, ["k"], "o", ["v"])
+        assert out.columns == ["k", "v"]
+        assert {r.k: r.v for r in out.collect()} == {"a": "z", "b": "only"}
+
+
 def test_multiline_reassembly(spark):
     df = spark.createDataFrame(
         [("h", 1, "START one"), ("h", 2, "  cont1"), ("h", 3, "  cont2"),

@@ -336,3 +336,28 @@ def test_entry_contract(spark):
     assert {"sink", "source", "count", "sum_tokens"} <= cols
     assert {"resume_buckets_skipped", "lineage_committed_rows"} <= cols
     assert all(r.resume_buckets_skipped == 4 for r in rows)
+
+
+def test_package_zip_rebuilds_stale_zip(tmp_path):
+    """A zip left from older sources is replaced before executors get it;
+    a zip stamped with the current source hash is reused as is."""
+    import os
+    import zipfile
+
+    import __spark_entry__ as e
+    zp = str(tmp_path / "dist" / "pastash_spark.zip")
+    (tmp_path / "dist").mkdir()
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("pastash_spark/operators/correlate.py", "# stale\n")
+        zf.comment = b"0" * 64
+    assert e._package_zip(zp) == zp
+    with zipfile.ZipFile(zp) as zf:
+        assert zf.comment == e._source_hash().encode()
+        names = set(zf.namelist())
+        assert "pastash_spark/__init__.py" in names
+        with open(os.path.join(os.path.dirname(e.__file__), "pastash_spark",
+                               "operators", "correlate.py"), "rb") as fh:
+            assert zf.read("pastash_spark/operators/correlate.py") == fh.read()
+    stamp = os.stat(zp).st_mtime_ns
+    e._package_zip(zp)
+    assert os.stat(zp).st_mtime_ns == stamp

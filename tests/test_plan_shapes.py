@@ -155,6 +155,32 @@ def test_janus_trace_spans_single_window_shuffle(spark):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
+def test_asof_latest_is_one_window_no_join(spark):
+    """asof_latest = one keyed exchange + one Window over the merged
+    probe/pub stream; never a join."""
+    from pastash_spark.operators.correlate import asof_latest
+    probes = spark.createDataFrame([("a", 2)], "k string, t long")
+    pubs = spark.createDataFrame([("a", 1, "v")], "k string, po long, v string")
+    for first_only in (False, True):
+        plan = _plan(asof_latest(probes, pubs, keys=["k"], probe_order="t",
+                                 pub_order="po", cols=["v"],
+                                 first_only=first_only))
+        assert plan.count("Window [") == 1
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "Join" not in plan
+
+
+def test_rtpproxy_plans_no_join_and_no_row_number(spark):
+    """Every rtpproxy cache read is an asof_latest merged stream: no
+    range join, no row_number window."""
+    from pastash_spark.operators.correlate import app_rtpproxy_correlate
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    for reuse in (False, True):
+        plan = _plan(app_rtpproxy_correlate(df, reuse=reuse))
+        assert "Join" not in plan
+        assert "row_number" not in plan
+
+
 def test_salted_aggregate_is_two_stage(spark):
     """Partial agg on (key, salt) then final on key: exactly two hash
     exchanges, never one reducer owning the hot key."""

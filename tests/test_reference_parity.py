@@ -599,6 +599,24 @@ class TestAppRtpProxy:
                   if r.method == "create" and r.token == "7000_1"]
         assert len(c_7000) == 1 and c_7000[0].ip == "10.0.0.3"
 
+    def test_same_line_create_reply_and_repeated_cleanup_port(self, spark):
+        # a line that is both a create and a reply for the same token must
+        # not pair with itself: the reply only sees strictly earlier
+        # creates.  A cleanup line naming one port twice emits one delete.
+        from pastash_spark.operators import correlate as C
+        lines = self._lines() + [
+            'received command "9000_1 Uc0 call-9@h 1 2" '
+            'sending reply "9000_1 37000 10.0.0.7#012"',
+            'session on ports 35000/35000 is cleaned up',
+        ]
+        df = spark.createDataFrame(
+            [(i + 1, l) for i, l in enumerate(lines)],
+            "line_no long, message string")
+        out = C.app_rtpproxy_correlate(df).collect()
+        assert not [r for r in out if r.token == "9000_1"]
+        dels = [r for r in out if r.method == "delete" and r.line_no == 8]
+        assert [(r.token, r.port) for r in dels] == [("4442_5", "35000")]
+
 
 class TestAppJanusSip:
     """plugins/filters/app_janus_sip/filter_app_janus_sip.js — websocket/
@@ -1189,11 +1207,14 @@ class TestAppAudiocodes:
         assert ("10.0.0.6", 7000, "10.0.0.5", 6000) in srcs
 
     def test_log_lines_resolve_via_sidcache(self, spark):
+        early = "[S=3] [SID=ac1:12:777] chatter before the first SIP message"
         log1 = "[S=9] [SID=ac1:12:777] some device log chatter"
-        rows = self._run(spark, [self.IN_LINE, log1], logs=True, qos=False,
-                         localip="1.1.1.1")
-        logs = [r for r in rows if r.proto_type == 100]
-        assert len(logs) == 1
+        rows = self._run(spark, [early, self.IN_LINE, log1], logs=True,
+                         qos=False, localip="1.1.1.1")
+        logs = {r.line_no: r for r in rows if r.proto_type == 100}
+        assert set(logs) == {1, 3}
+        # nothing cached yet for SID 777: the sid itself correlates
+        assert logs[1].correlation_id == "777"
         # SID 777 resolved to the SIP leg's Call-ID (sidcache get, :348)
-        assert logs[0].correlation_id == "cid-77"
-        assert logs[0].src_port == 514 and logs[0].dst_port == 514
+        assert logs[3].correlation_id == "cid-77"
+        assert logs[3].src_port == 514 and logs[3].dst_port == 514
