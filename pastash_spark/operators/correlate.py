@@ -1011,7 +1011,9 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     string columns subtype(int)/event_name/jsep_type/jsep_owner/
     ice_state/dtls_state/data_event/emitter (missing ones read as NULL).
     Output: one row per span — (order, session_id, trace_id, span_id,
-    parent_span_id, name, service, start_us, end_us, duration_us).
+    parent_span_id, name, service, start_us, end_us, duration_us);
+    session_id keeps the input column's dtype (it is cast to string only
+    inside the trace key).
     Type 32 media METRICS are the tracer's prometheus half — covered by
     app_janus_correlate's enrichment, not spans."""
     cols = set(df.columns)
@@ -1073,7 +1075,7 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     pre = df.select(
         tk.alias("_tk"), F.col(order),
         F.col(ts).cast("long").alias("_ts"),
-        F.col(session).cast("string").alias("_session"),
+        F.col(session).alias("_session"),
         (F.when(open_att, 0).when(open_sdp, 1).when(open_ice, 2)
          .when(open_sess, 3)).alias("_ofl"),
         (F.when(close_att, 0).when(close_sdp, 1).when(close_ice, 2)

@@ -1,10 +1,11 @@
 """Parsing / projection / predicate operators (SURVEY.md §2.1).
 
 Each reimplements one reference filter's semantics on columns.  Hot paths are
-native Catalyst expressions; multi-field regex extraction offers an
-Arrow-vectorized single-pass mode (one compiled-regex sweep per batch via
-``pandas.Series.str.extract``) because N native ``regexp_extract`` calls
-re-run the regex N times per row — measured crossover is a handful of fields.
+native Catalyst expressions.  Multi-field regex extraction runs every capture
+in ONE JVM regex pass per row (``_capture_kernel``: ``regexp_replace`` into a
+separator-joined string, then ``split``), where N ``regexp_extract`` calls
+would re-run the regex N times per row; an Arrow ``pandas.Series.str.extract``
+mode stays available as an explicit opt-in.
 """
 
 from __future__ import annotations
@@ -24,16 +25,41 @@ from pastash_spark.functions.interpolate import moment_to_java
 DEFAULT_FIELD = "message"
 
 
-def _add_tag(df: DataFrame, cond: Column, tag: str) -> DataFrame:
-    """Append `tag` to the tags array where cond holds (creates tags col).
+def _tag_expr(df: DataFrame, cond: Column, tag: str) -> Column:
+    """The tags array with `tag` appended where cond holds (an absent tags
+    column counts as empty).
 
     Reference: base_component.js:356-365 (add_tags) used by grok's
     tag_on_failure (filter_grok.js:151-167)."""
     tags = F.col("tags") if "tags" in df.columns else F.lit(None).cast("array<string>")
     base = F.coalesce(tags, F.array().cast("array<string>"))
-    return df.withColumn(
-        "tags", F.when(cond, F.array_union(base, F.array(F.lit(tag)))).otherwise(base)
-    )
+    return F.when(cond, F.array_union(base, F.array(F.lit(tag)))).otherwise(base)
+
+
+# Field separator of the capture kernel: a control character (SOH) that
+# text logs practically never carry; rows that do carry it take the
+# per-field path, so FIX-style SOH-delimited lines still parse exactly.
+_SEP = "\u0001"
+
+
+def _capture_kernel(src: Column, java_re: str, groups: Sequence[int]) -> Column:
+    """Every capture of ``java_re`` from ONE JVM regex pass per row.
+
+    ``regexp_replace`` rewrites the whole value, anchored around the first
+    match ``regexp_extract`` would find, into ``SEP g1 SEP ... gn SEP`` and
+    ``split`` cuts it apart: a matching row yields ``["", g1, ..., gn, ""]``
+    (size n + 2; a non-participating group reads ''), a non-matching row
+    its unchanged value (size 1, it holds no SEP) and a null row null.
+    Values that contain SEP fall back to ``rlike`` + one ``regexp_extract``
+    per group, shaped the same (null when unmatched)."""
+    whole = rf"(?U)\A(?s:.*?)(?:{java_re})(?s:.*)\z"
+    rewrite = _SEP.join(["", *(f"${g}" for g in groups), ""])
+    per_group = F.when(src.rlike(java_re), F.array(
+        F.lit(""), *(F.regexp_extract(src, java_re, g) for g in groups),
+        F.lit("")))
+    return (F.when(src.contains(_SEP), per_group)
+            .otherwise(F.split(F.regexp_replace(src, whole, rewrite),
+                               _SEP, -1)))
 
 
 def regex_extract(
@@ -67,6 +93,12 @@ def regex_extract(
     spec supplies regex/fields/numerical_fields/date_format, and a captured
     field named ``timestamp``/``@timestamp`` is parsed into ``@timestamp``
     (regex_helper.js:19-28).  Explicit kwargs override spec entries.
+
+    ``mode``: ``"auto"`` extracts every capture in one JVM regex pass
+    (``_capture_kernel``), whatever the number of fields — the plan holds
+    no Python.  ``"arrow"`` opts in to one vectorized
+    ``pandas.Series.str.extract`` pass per Arrow batch (Python ``re``
+    semantics); both read an empty or non-participating group as null.
     """
     if builtin is not None:
         from pastash_spark.functions.regex_patterns import lookup_regex_pattern
@@ -108,22 +140,16 @@ def regex_extract(
     if not java_re.startswith("(?U)"):
         java_re = "(?U)" + java_re
 
-    if mode == "auto":
-        mode = "native" if len(out_fields) <= 4 else "arrow"
-
     src = F.col(field)
-
-    if mode == "native":
-        matched = F.coalesce(src.rlike(java_re), F.lit(False))
-        for f in out_fields:
-            cap = F.regexp_extract(src, java_re, group_of[f])
-            # '' from regexp_extract means unmatched/empty -> absent field
-            val = F.when(matched & (cap != ""), cap)
-            df = df.withColumn(f, val)
-    else:
-        # ONE Arrow pass computes every capture AND the match flag — the
-        # vectorized replacement for the reference's per-event regex callback
-        # (north rule: no per-row Python, no duplicate JVM regex pass).
+    if mode == "auto":
+        df = df.withColumn("_ex", _capture_kernel(
+            src, java_re, [group_of[f] for f in out_fields]))
+        matched = F.coalesce(F.size("_ex") > 1, F.lit(False))
+        # '' means an empty or non-participating group -> absent field
+        caps = {f: F.nullif(F.get(F.col("_ex"), i + 1), F.lit(""))
+                for i, f in enumerate(out_fields)}
+    elif mode == "arrow":
+        # ONE Arrow pass computes every capture AND the match flag.
         struct_t = T.StructType(
             [T.StructField(f, T.StringType()) for f in out_fields]
             + [T.StructField("_matched", T.BooleanType())])
@@ -145,27 +171,25 @@ def regex_extract(
 
         df = df.withColumn("_ex", extract_all(src))
         matched = F.coalesce(F.col("_ex")["_matched"], F.lit(False))
-        for f in out_fields:
-            df = df.withColumn(f, F.col("_ex")[f])
+        caps = {f: F.col("_ex")[f] for f in out_fields}
+    else:
+        raise ValueError(f"regex_extract: unknown mode {mode!r}")
 
+    # captures, their coercions, @timestamp and the failure tag in ONE
+    # projection (a withColumn per field re-analyzes the plan each time)
     for f in numerical_fields:
-        if f in out_fields:
-            df = df.withColumn(f, coerce_numeric_str(F.col(f)))
-
+        if f in caps:
+            caps[f] = coerce_numeric_str(caps[f])
     if date_field and date_format:
         # try_: an unparseable capture leaves @timestamp NULL instead of
         # failing the job (the reference's moment parse is lenient too,
         # regex_helper.js:19-28)
-        df = df.withColumn(
-            "@timestamp",
-            F.try_to_timestamp(F.col(date_field),
-                               F.lit(moment_to_java(date_format))),
-        )
+        caps["@timestamp"] = F.try_to_timestamp(
+            caps.get(date_field, F.col(date_field)),
+            F.lit(moment_to_java(date_format)))
     if tag_on_failure:
-        df = _add_tag(df, ~matched, tag_on_failure)
-    if "_ex" in df.columns:
-        df = df.drop("_ex")
-    return df
+        caps["tags"] = _tag_expr(df, ~matched, tag_on_failure)
+    return df.withColumns(caps).drop("_ex")
 
 
 def grok(
@@ -294,24 +318,26 @@ def syslog_pri(df: DataFrame, *, field: str = "syslog_pri",
     pri = F.when((pri0 >= 0) & (pri0 < 192), pri0)
     sev = pri.bitwiseAND(F.lit(7))
     fac = F.shiftright(pri, 3)
-    sev_labels = F.array(*[F.lit(s) for s in SYSLOG_SEVERITIES])
-    fac_labels = F.array(*[F.lit(s) for s in SYSLOG_FACILITIES])
+    # one SQL literal per table: an F.lit per label costs a driver round
+    # trip each (32 of them) at every plan build
+    sev_labels, fac_labels = (
+        F.expr("array(" + ", ".join(f"'{s}'" for s in labels) + ")")
+        for labels in (SYSLOG_SEVERITIES, SYSLOG_FACILITIES))
     sev_name_col = severity_field or (prefix + "severity_name")
     fac_name_col = facility_field or (prefix + "facility_name")
-    out = df
+    cols = {}
     if prefix + "severity" != sev_name_col:
-        out = out.withColumn(prefix + "severity", sev)
+        cols[prefix + "severity"] = sev
     if prefix + "facility" != fac_name_col:
-        out = out.withColumn(prefix + "facility", fac)
+        cols[prefix + "facility"] = fac
     # explicit null guard: element_at(arr, NULL) resolves like a
     # negative index (returns the LAST element), not NULL
-    return (out
-            .withColumn(sev_name_col,
-                        F.when(sev.isNotNull(),
-                               F.element_at(sev_labels, sev + 1)))
-            .withColumn(fac_name_col,
-                        F.when(fac.isNotNull() & (fac < len(SYSLOG_FACILITIES)),
-                               F.element_at(fac_labels, fac + 1))))
+    cols[sev_name_col] = F.when(sev.isNotNull(),
+                                F.element_at(sev_labels, sev + 1))
+    cols[fac_name_col] = F.when(
+        fac.isNotNull() & (fac < len(SYSLOG_FACILITIES)),
+        F.element_at(fac_labels, fac + 1))
+    return df.withColumns(cols)
 
 
 def http_status_classifier(df: DataFrame, *, field: str = "status",

@@ -18,6 +18,7 @@ from pastash_spark import datagen
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
 from pastash_spark.operators.enrich import broadcast_lookup
+from pastash_spark.session import local_frame
 
 # Grok pattern for the rendered syslog-style header in datagen.token_sequences:
 #   <pri>MMM DD HH:mm:ss host prog[pid]: ntok=N first=T doc=ID
@@ -136,7 +137,8 @@ def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
                             buckets_per_job=buckets_per_job)
     committed = log.metrics().filter(F.col("status") == "done")
     lineage_rows = committed.agg(F.sum("rows")).first()[0] or 0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(first["processed"], first["rows"], first["tokens"],
           int(lineage_rows), resumed["skipped"], resumed["processed"])],
         "lineage_buckets_processed int, lineage_rows long, "

@@ -21,6 +21,7 @@ from pastash_spark.operators import mutate as M
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
 from pastash_spark.operators.enrich import asof_lookup, broadcast_lookup
+from pastash_spark.session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -257,7 +258,8 @@ FROM events e LEFT JOIN lk ON e.event_type = lk.event_type
 """)
 def q_broadcast_enrich(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    lk = spark.createDataFrame(
+    lk = local_frame(
+        spark,
         [("click", 1.0), ("view", 0.5), ("purchase", 5.0),
          ("signup", 3.0), ("error", 0.0)], "event_type string, weight double")
     return broadcast_lookup(ev, lk, "event_type").select("event_id", "weight")
@@ -569,7 +571,8 @@ def q_geoip_range(spark, sf_dir):
     from pastash_spark.operators.enrich import range_lookup_bucketed
     ev = _t(spark, sf_dir, "events").withColumn(
         "ip_int", F.col("event_id") % 100000)
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [(i * 10000, i * 10000 + 4999, f"net-{i}") for i in range(10)],
         "range_start long, range_end long, geo_name string")
     out = range_lookup_bucketed(ev, ranges, "ip_int", bucket_bits=12)
@@ -1169,8 +1172,8 @@ FROM documents
 def q_pipeline_haproxy(spark, sf_dir):
     """%{HAPROXYHTTP} end-to-end over a rendered haproxy line (the pattern
     the reference's own grok golden test exercises,
-    test_218_filter_grok.js:38-84) — 38 captures through the single-pass
-    Arrow extractor, verified analytically."""
+    test_218_filter_grok.js:38-84) — 44 captures through the one-pass JVM
+    capture kernel, verified analytically."""
     df = _docs_haproxy(spark, sf_dir)
     out = P.grok(df, "%{HAPROXYHTTP}", field="raw",
                  numerical_fields=["client_port", "http_status_code",

@@ -10,8 +10,10 @@ sized to the local core count but overridable for a real cluster.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Tuned for the local[{8,32}] sandbox; on a real cluster these are overridden
 # via spark-submit --conf.  Kept low-surprise: everything here is also the
@@ -76,3 +78,29 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: "T.StructType | str") -> DataFrame:
+    """A literal DataFrame (dims, summaries, commit rows) planned as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` over a Python
+    RDD, so every action that reads it (a broadcast dim: every query) runs
+    a Python-worker job first.  Built from an Arrow table instead, the rows
+    are serialized once, on the driver, into the plan itself (up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes; above it
+    Spark parallelizes the batches instead).  ``schema`` is a
+    ``StructType`` or a DDL string.  Arrow reads a naive datetime as UTC
+    (``createDataFrame`` reads it as local time): pass aware ones."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = [pa.array(values, type=arrow_type)
+              for values, arrow_type in zip(columns, arrow_schema.types)]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

@@ -52,31 +52,6 @@ def read_lines(spark: SparkSession, path: str, *,
     return _stamp(df, **stamp_kw)
 
 
-def read_ndjson(spark: SparkSession, path: str, schema: T.StructType | str,
-                **stamp_kw) -> DataFrame:
-    """json_logstash unserializer (base_input.js:27-41): newline-delimited
-    JSON events with an explicit schema (plan-time typing)."""
-    df = spark.read.schema(schema).json(path)
-    return _stamp(df, **stamp_kw)
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType | str,
-             *, header: bool = False, sep: str = ",", **stamp_kw) -> DataFrame:
-    df = spark.read.schema(schema).options(header=header, sep=sep).csv(path)
-    return _stamp(df, **stamp_kw)
-
-
-def read_parquet(spark: SparkSession, path: str, columns: Sequence[str] | None = None,
-                 **stamp_kw) -> DataFrame:
-    """Columnar table scan — the engine's primary source (the reference has
-    no columnar format at all, SURVEY §2.6).  Explicit column pruning keeps
-    ReadSchema minimal even before Catalyst prunes."""
-    df = spark.read.parquet(path)
-    if columns:
-        df = df.select(*columns)
-    return _stamp(df, **stamp_kw)
-
-
 def read_msgpack(spark: SparkSession, path: str,
                  schema: T.StructType, **stamp_kw) -> DataFrame:
     """msgpack unserializer (base_input.js:27-41 'msgpack' branch).

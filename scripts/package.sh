@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # Build the --py-files zip for spark-submit (north rule: "ships as
-# spark-submit --py-files package").
+# spark-submit --py-files package").  __spark_entry__._package_zip makes
+# every copy of the zip: it stamps it with the sha256 of
+# pastash_spark/**/*.py and rebuilds it only when that stamp is stale, so a
+# session that ships the zip later reuses this one as is.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-rm -f dist/pastash_spark.zip
-mkdir -p dist
-zip -qr dist/pastash_spark.zip pastash_spark -x '*__pycache__*'
-echo "dist/pastash_spark.zip"
+python3 -c 'import os, __spark_entry__ as e; print(os.path.relpath(e._package_zip()))'

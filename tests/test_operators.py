@@ -38,9 +38,113 @@ def test_regex_extract_arrow_mode_matches_native(spark):
     kw = dict(fields=list("abcde"),
               numerical_fields=list("abcde"))
     pat = r"a=(\d+) b=(\d+) c=(\d+) d=(\d+) e=(\d+)"
-    nat = P.regex_extract(df, pat, mode="native", **kw).orderBy("message").collect()
+    nat = P.regex_extract(df, pat, **kw).orderBy("message").collect()
     arw = P.regex_extract(df, pat, mode="arrow", **kw).orderBy("message").collect()
     assert [r.asDict() for r in nat] == [r.asDict() for r in arw]
+
+
+def _per_field_extract(df, regex, fields, *, field="message", flags=""):
+    """Reference result for the capture kernel: rlike + one regexp_extract
+    per group, '' read as an absent field."""
+    java_re = "(?U)" + (f"(?{flags})" if flags else "") + regex
+    src = F.col(field)
+    matched = F.coalesce(src.rlike(java_re), F.lit(False))
+    return df.withColumns({
+        f: F.when(matched & (F.regexp_extract(src, java_re, g) != ""),
+                  F.regexp_extract(src, java_re, g))
+        for g, f in enumerate(fields, start=1)})
+
+
+def _assert_kernel_matches_per_field(df, regex, fields, flags=""):
+    got = P.regex_extract(df, regex, fields=fields, regex_flags=flags or None,
+                          tag_on_failure="_fail")
+    want = _per_field_extract(df, regex, fields, flags=flags)
+    assert got.columns == want.columns + ["tags"]
+    assert (got.drop("tags").orderBy("id").collect()
+            == want.orderBy("id").collect())
+    return {r.id: r for r in got.collect()}
+
+
+def test_capture_kernel_input_with_separator_char(spark):
+    # U+0001 (SOH) is the kernel's field separator: FIX-style lines that
+    # carry it take the per-field path and still parse exactly
+    df = spark.createDataFrame(
+        [(1, "8=FIX.4.2\u000135=D\u000149=ACME"), (2, "8=x\u000135=\u0001"),
+         (3, "35=F 49=B"), (4, "\u0001")], "id int, message string")
+    rows = _assert_kernel_matches_per_field(
+        df, "35=([^\u0001 ]*)[\u0001 ]49=(\\w+)", ["msg_type", "sender"])
+    assert (rows[1].msg_type, rows[1].sender) == ("D", "ACME")
+    assert (rows[3].msg_type, rows[3].sender) == ("F", "B")
+    assert rows[2].tags == ["_fail"] and rows[4].tags == ["_fail"]
+
+
+def test_capture_kernel_multiline_flags(spark):
+    df = spark.createDataFrame(
+        [(1, "head\nKEY=v1 x\nKEY=v2"), (2, "key=solo"), (3, "x KEY=no")],
+        "id int, message string")
+    rows = _assert_kernel_matches_per_field(df, r"^key=(\w+)", ["k"],
+                                            flags="im")
+    assert [rows[i].k for i in (1, 2, 3)] == ["v1", "solo", None]
+
+
+def test_capture_kernel_non_participating_groups_are_null(spark):
+    df = spark.createDataFrame(
+        [(1, "x12"), (2, "y"), (3, "12"), (4, "")], "id int, message string")
+    rows = _assert_kernel_matches_per_field(
+        df, r"(x)?(\d+)?(y)?", ["a", "b", "c"])
+    assert (rows[1].a, rows[1].b, rows[1].c) == ("x", "12", None)
+    assert (rows[2].a, rows[2].b, rows[2].c) == (None, None, "y")
+    # the regex matches the empty string: a match with no captures
+    assert rows[4].tags == [] and rows[4].a is None
+
+
+def test_capture_kernel_null_input(spark):
+    df = spark.createDataFrame([(1, None), (2, "a=1")],
+                               "id int, message string")
+    rows = _assert_kernel_matches_per_field(df, r"a=(\d+)", ["a"])
+    assert rows[1].a is None and rows[1].tags == ["_fail"]
+    assert rows[2].a == "1" and rows[2].tags == []
+
+
+def test_capture_kernel_replaces_existing_column_in_place(spark):
+    df = spark.createDataFrame([(1, "old", "a=1 b=2", 9), (2, "old", "zz", 9)],
+                               "id int, b string, message string, z int")
+    rows = _assert_kernel_matches_per_field(df, r"a=(\d+) b=(\d+)",
+                                            ["a", "b"])
+    assert (rows[1].a, rows[1].b) == ("1", "2")
+    # no match: the captured column reads null (the reference leaves an
+    # absent field), in its original position
+    assert rows[2].b is None
+    out = P.regex_extract(df, r"a=(\d+) b=(\d+)", fields=["a", "b"])
+    assert out.columns == ["id", "b", "message", "z", "a"]
+
+
+def test_capture_kernel_haproxy_equals_arrow(spark):
+    """%{HAPROXYHTTP} (44 captures) over rendered lines: the default JVM
+    kernel and the Arrow opt-in agree on every field and tag."""
+    d = F.col("id")
+    raw = F.concat(
+        F.lit("Sep 14 02:01:37 lb haproxy["), (1000 + d % 9000).cast("string"),
+        F.lit("]: 10.0."), (d % 256).cast("string"), F.lit(".7:"),
+        (10000 + d).cast("string"), F.lit(" [14/Sep/2014:02:01:37."),
+        F.lpad((d % 1000).cast("string"), 3, "0"), F.lit("] fe-"),
+        (d % 4).cast("string"), F.lit(" be-1/srv"), (d % 3).cast("string"),
+        F.lit(" 0/0/1/2/3 "), (200 + (d % 4) * 100).cast("string"),
+        F.lit(" "), (d * 7).cast("string"),
+        F.lit(' - - ---- 10/9/8/7/0 0/0 "GET /d/'), d.cast("string"),
+        F.lit('/x HTTP/1.1"'))
+    df = spark.range(200).select(
+        "id", F.when(d % 17 == 0, F.lit("not haproxy")).otherwise(raw)
+        .alias("raw"))
+    num = ["client_port", "http_status_code", "bytes_read"]
+    kern = P.grok(df, "%{HAPROXYHTTP}", field="raw", numerical_fields=num)
+    arw = P.grok(df, "%{HAPROXYHTTP}", field="raw", numerical_fields=num,
+                 mode="arrow")
+    assert len(kern.columns) == 2 + 44 + 1 and kern.columns == arw.columns
+    k, a = kern.orderBy("id").collect(), arw.orderBy("id").collect()
+    assert k == a
+    assert sum(r.tags == ["_grokparsefailure"] for r in k) == 12
+    assert k[1].http_status_code == 300.0 and k[1].backend_name == "be-1"
 
 
 def test_grok_failure_tag(spark):

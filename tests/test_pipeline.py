@@ -95,7 +95,7 @@ def test_flagship_parse_fields(spark):
 def test_flagship_arrow_and_native_parse_agree(spark):
     df = datagen.token_sequences(spark, 300).cache()
     try:
-        nat = flagship.run(spark, df, mode="native")["aggregates"] \
+        nat = flagship.run(spark, df)["aggregates"] \
             .orderBy("sink", "source").collect()
         arw = flagship.run(spark, df, mode="arrow")["aggregates"] \
             .orderBy("sink", "source").collect()

@@ -59,7 +59,7 @@ def test_enrichment_is_broadcast_join(spark, token_parquet):
 
 def test_flagship_single_stage_until_aggregate(spark, token_parquet):
     df = spark.read.parquet(token_parquet)
-    out = flagship.build(df, datagen.source_lookup(spark), mode="native")
+    out = flagship.build(df, datagen.source_lookup(spark))
     routed_plan = _plan(out["routed"])
     # parse -> enrich -> route is map-only: no Exchange before the routing
     # column exists (broadcast join exchanges only the dim side)
@@ -81,10 +81,32 @@ def test_flagship_arrow_mode_single_python_runner(spark, token_parquet):
 
 
 def test_native_mode_has_no_python_at_all(spark, token_parquet):
+    """The default grok path is the one-pass JVM capture kernel, whatever
+    the capture count, and the source dim is a LocalRelation: neither the
+    flagship nor a 44-capture %{HAPROXYHTTP} grok plans a Python runner or
+    a Python-RDD scan."""
+    from pastash_spark.operators import parse as P
     df = spark.read.parquet(token_parquet)
-    out = flagship.build(df, datagen.source_lookup(spark), mode="native")
-    plan = _plan(out["routed"])
-    assert "EvalPython" not in plan         # pure JVM path
+    out = flagship.build(df, datagen.source_lookup(spark))
+    hap = P.grok(df.select(F.col("raw").alias("message")), "%{HAPROXYHTTP}",
+                 numerical_fields=["client_port", "bytes_read"])
+    for q in (out["routed"], out["aggregates"], hap):
+        plan = _plan(q)
+        assert "EvalPython" not in plan and "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize("rows, schema", [
+    ([], "a int, b string"),
+    ([(1, None), (None, "x")], "a int, b string"),
+    ([("k", [1, 2], 0.5)], "k string, xs array<int>, w double"),
+])
+def test_local_frame_is_local_relation(spark, rows, schema):
+    from pastash_spark.session import local_frame
+    df = local_frame(spark, rows, schema)
+    assert _optimized(df).startswith("LocalRelation")
+    assert "ExistingRDD" not in _plan(df)
+    assert [tuple(r) for r in df.collect()] == [
+        tuple(r) for r in spark.createDataFrame(rows, schema).collect()]
 
 
 def test_dedup_exact_is_single_shuffle(spark):

@@ -1126,6 +1126,23 @@ class TestJanusTraceSpans:
         joined = [r for r in out2 if r.name == "User joined"][0]
         assert joined.service == "Plugin"
 
+    def test_bigint_session_keeps_its_dtype(self, spark):
+        """session_id comes out in the input column's dtype; the trace key
+        (and so the ids) still hashes its string form."""
+        import hashlib
+        from pyspark.sql import types as T
+
+        from pastash_spark.operators import correlate as C
+        df = spark.createDataFrame(
+            [(1, 100, 42, 1, "created"), (2, 900, 42, 1, "destroyed")],
+            "ord long, ts_us long, session_id bigint, type int, "
+            "event_name string")
+        out = C.janus_trace_spans(df, order="ord", ts="ts_us")
+        assert out.schema["session_id"].dataType == T.LongType()
+        got = {r.name: r for r in out.collect()}
+        assert got["Session"].session_id == 42
+        assert got["Session"].trace_id == hashlib.md5(b"42").hexdigest()
+
 
 class TestAppAudiocodes:
     """plugins/filters/app_audiocodes/filter_app_audiocodes.js (default
